@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
-from .mentions import mentions_df, with_tokens, _tok, sent_id_at
+from .mentions import with_tokens, _tok, sent_id_at, spans_expr
 
 
 def preds_by_sentence(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -111,24 +111,34 @@ def triples_from_mentions(
     )
 
 
-def triples_map_only(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Zero-shuffle triple extraction: mention and predicate arrays are
-    built per document and pairs are generated inside array expressions —
-    the whole stage is a single map over the pages scan (measured 2.4×
-    the join formulation at bench scale, and no exchange at all at
-    100 TB).
+def doc_extractions(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, mentions, triples) — one row per document, with the
+    gazetteer fold evaluated ONCE and both of its consumers derived from
+    that one evaluation:
 
-    Complexity bound: O(m² · n) per doc with m = mentions and n = tokens.
-    The mention array (which now embeds the general gazetteer fold) is
-    LET-BOUND via a single-element-array ``transform`` so the nested pair
-    lambdas reference a lambda variable instead of re-evaluating the fold
-    per outer element (the no-CSE-in-lambdas rule).  Natural web text has
-    bounded mention density so this is effectively linear; for
-    adversarial all-dictionary documents prefer
-    :func:`triples_from_mentions` over a materialized mention table."""
-    from .. import config as _c
-    from .mentions import _tok, sent_id_at, spans_expr, with_tokens
+    * ``mentions`` array<struct<start_idx, end_idx, surface, tag,
+      sent_id>> — the decoded spans (general n=5..1 fold) with their
+      sentence ids; :func:`explode_mentions` flattens it to
+      ``mentions_df`` rows;
+    * ``triples`` array<struct<sent_id, subj, subj_tag, pred, obj,
+      obj_tag, subj_start, obj_start>> — the map-only mention pairs that
+      have a predicate between them; :func:`explode_triples` flattens it
+      to ``triples_map_only`` rows.
 
+    A pure map over the pages scan (no shuffle).  Complexity bound:
+    O(m² · n) per doc with m = mentions and n = tokens.  The mention and
+    predicate arrays are LET-BOUND via a single-element-array
+    ``transform`` so the nested pair lambdas reference a lambda variable
+    instead of re-evaluating the fold per outer element (the
+    no-CSE-in-lambdas rule).  Natural web text has bounded mention
+    density so this is effectively linear; for adversarial
+    all-dictionary documents prefer :func:`triples_from_mentions` over a
+    materialized mention table.  The two output columns read one let-bound
+    struct: Catalyst's CollapseProject does not inline a non-cheap
+    expression into two consumers, so the fold stays single.  Do not
+    filter on either column before materializing the result: predicate
+    pushdown copies the fold into the filter and inlines the token
+    split into every lambda (measured 3-5× slower)."""
     df = with_tokens(docs)
     n = F.col("n_tokens")
     seq1 = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
@@ -148,9 +158,10 @@ def triples_map_only(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ),
     )
     preds = F.transform(
-        F.filter(seq1, lambda i: _tok(i).isin(_c.PRED_WORDS)),
+        F.filter(seq1, lambda i: _tok(i).isin(config.PRED_WORDS)),
         lambda i: F.struct(i.cast("long").alias("pos"), _tok(i).alias("tok")),
     )
+
     # let-binding: evaluate (ments, preds) ONCE per row, bind to z
     def pair_expr(z):
         ments, pred_arr = z["ms"], z["ps"]
@@ -161,7 +172,7 @@ def triples_map_only(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     F.filter(
                         ments,
                         lambda o: (o["start_idx"] > s["end_idx"] + 1)
-                        & (o["start_idx"] <= s["end_idx"] + 1 + _c.TRIPLE_MAX_GAP)
+                        & (o["start_idx"] <= s["end_idx"] + 1 + config.TRIPLE_MAX_GAP)
                         & (o["sent_id"] == s["sent_id"]),
                     ),
                     lambda o: F.struct(
@@ -184,26 +195,57 @@ def triples_map_only(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
         )
 
-    pair = F.element_at(
+    ext = F.element_at(
         F.transform(
-            F.array(F.struct(m_all.alias("ms"), preds.alias("ps"))), pair_expr
+            F.array(F.struct(m_all.alias("ms"), preds.alias("ps"))),
+            lambda z: F.struct(
+                z["ms"].alias("mentions"),
+                F.filter(pair_expr(z), lambda t: t["pred"].isNotNull()).alias(
+                    "triples"
+                ),
+            ),
         ),
         1,
     )
-    out = df.select(F.col(id_col).alias("doc_id"), F.explode(pair).alias("t")).filter(
-        F.col("t.pred").isNotNull()
+    return df.select(F.col(id_col).alias("doc_id"), ext.alias("x")).select(
+        "doc_id", "x.mentions", "x.triples"
     )
-    return out.select(
-        "doc_id",
-        "t.sent_id",
-        "t.subj",
-        "t.subj_tag",
-        "t.pred",
-        "t.obj",
-        "t.obj_tag",
-        "t.subj_start",
-        "t.obj_start",
+
+
+def _explode(extractions: DataFrame, col: str) -> DataFrame:
+    """(doc_id, e) — one row per element of array column ``col``.
+
+    ``explode_outer`` + a null filter, not ``explode``: for an inner
+    explode of a plain column Catalyst infers ``size(col) > 0`` and
+    pushes it below the projection that computes ``col``, which copies
+    the whole gazetteer fold into the filter (three folds per row
+    instead of one when ``extractions`` is unmaterialized)."""
+    return extractions.select("doc_id", F.explode_outer(col).alias("e")).filter(
+        F.col("e").isNotNull()
     )
+
+
+def explode_mentions(extractions: DataFrame) -> DataFrame:
+    """:func:`doc_extractions` rows → (doc_id, sent_id, start_idx,
+    end_idx, surface, tag), the ``mentions_df`` schema."""
+    return _explode(extractions, "mentions").select(
+        "doc_id", "e.sent_id", "e.start_idx", "e.end_idx", "e.surface", "e.tag"
+    )
+
+
+def explode_triples(extractions: DataFrame) -> DataFrame:
+    """:func:`doc_extractions` rows → (doc_id, sent_id, subj, subj_tag,
+    pred, obj, obj_tag, subj_start, obj_start) triple rows."""
+    return _explode(extractions, "triples").select("doc_id", "e.*")
+
+
+def triples_map_only(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Zero-shuffle triple extraction: mention and predicate arrays are
+    built per document and pairs are generated inside array expressions —
+    the whole stage is a single map over the pages scan (measured 2.4×
+    the join formulation at bench scale, and no exchange at all at
+    100 TB).  The per-document work is :func:`doc_extractions`."""
+    return explode_triples(doc_extractions(docs, id_col))
 
 
 def triples_df(

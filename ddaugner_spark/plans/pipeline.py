@@ -6,6 +6,34 @@ tables … checkpoints per-Iceberg-partition with lineage and per-stage
 metrics (mentions/sec, link-score candidates/sec, triples/sec) so any run
 is resumable mid-table".
 
+Output layout under ``out_dir``, per partition ``<col>=<value>``:
+
+* ``<col>=<value>/`` — the canonical triples (doc_id, sent_id, subj,
+  pred, obj, subj_surface, obj_surface);
+* ``_mentions/<col>=<value>/`` — the flat mention table (doc_id,
+  sent_id, start_idx, end_idx, surface, tag), the input of linking and
+  of the co-mention graph;
+* ``_links/<col>=<value>/`` — link scores (entity, class, n_mentions,
+  total_score);
+* ``_cc/<col>=<value>/`` — the connected-components stage dir (edge
+  checkpoint + label table backing the canonical ids);
+* ``_docs/<col>=<value>/`` — transient: the per-document extraction
+  (mention array + triple-pair array), removed once the partition's
+  triples are written (the ``_docs`` parent once every partition is done);
+* ``_lineage/<col>=<value>.json`` — the manifest; ``_run_report.json``.
+
+One fold per partition.  On the default path one map-only job over the
+pages evaluates the gazetteer fold once per document
+(``triples.doc_extractions``) and writes ``_docs``; the mention table
+and the map-only triples are both exploded from it, so neither
+re-folds.  Linking and CC read ``_mentions``; CC labels small graphs in
+one single-task kernel (``canonical.connected_components``); the output
+write canonicalizes the exploded triples.  Crawl dedup (``dedup_pages``)
+filters the documents inside that same job; the model path
+(``use_model``) detects its mentions separately but takes its triples
+from the fold too.  Every row count in the manifests comes from an
+``Observation`` on a job that runs anyway — no ``count()`` jobs.
+
 The metrics recorder is the Spark-shaped replacement for the reference's
 ``ExperimentRecorder`` (/root/reference/ddaugner/record.py:22-76): a JSON
 sidecar flushed per write plus a queryable metrics table.
@@ -26,13 +54,15 @@ parquet scan, so a resumed run reads only unfinished data.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import config
@@ -103,9 +133,9 @@ class KGPipeline:
         self.dedup_pages = dedup_pages
         os.makedirs(os.path.join(out_dir, "_lineage"), exist_ok=True)
 
-    def _detect_mentions(self, docs: DataFrame) -> DataFrame:
-        if not self.use_model:
-            return mentions.mentions_df(docs)
+    def _model_mentions(self, docs: DataFrame) -> DataFrame:
+        """The ``use_model`` mention table: model tags merged with the
+        dictionary tags, in ``mentions_df``'s columns and sentence ids."""
         from ..operators import tagging
 
         model_tagged = tagging.tagged_docs_udf(docs)
@@ -156,31 +186,6 @@ class KGPipeline:
             )
 
     # -- the dataflow -----------------------------------------------------
-    def triples_for(self, pages: DataFrame) -> DataFrame:
-        """The logical plan for one partition's pages (lazy)."""
-        docs = pages.select(
-            "doc_id", extract_text(F.col("html")).alias("text")
-        )
-        t = triples.triples_df(docs)
-        m = mentions.mentions_df(docs)
-        # CC checkpoints live under the pipeline's own output tree (the
-        # returned DataFrame is lazily backed by the final one — a bare
-        # tempdir would leak for the life of the box); consumed before
-        # the next triples_for call, which overwrites it
-        comps = canonical.connected_components(
-            canonical.co_mention_edges(m),
-            stage_dir=os.path.join(self.out_dir, "_cc", "adhoc"),
-        )
-        return canonical.canonicalize_triples(t, comps).select(
-            "doc_id",
-            "sent_id",
-            F.col("subj_canon").alias("subj"),
-            "pred",
-            F.col("obj_canon").alias("obj"),
-            F.col("subj").alias("subj_surface"),
-            F.col("obj").alias("obj_surface"),
-        )
-
     def run(
         self, pages: DataFrame, resume: bool = True, max_concurrent: int = 1
     ) -> RunReport:
@@ -226,62 +231,80 @@ class KGPipeline:
         for part, stages in results:
             report.stages.extend(stages)
             report.partitions.append(str(part))
+        # every partition has removed its own extraction; the shared
+        # parent goes only now, when no partition can still be writing
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.join(self.out_dir, "_docs"))
         with open(os.path.join(self.out_dir, "_run_report.json"), "w") as fh:
             fh.write(report.to_json())
         return report
 
     def _run_partition(self, part, ppages: DataFrame) -> List[StageMetrics]:
-        stages: List[StageMetrics] = []
+        key = f"{self.partition_col}={part}"
+        observations: Dict[str, Observation] = {}
 
+        def observed(df: DataFrame, what: str) -> DataFrame:
+            """``df`` with its row count observed on whichever job runs it
+            first — the metrics ride on jobs that run anyway."""
+            observations[what] = Observation(f"{what}:{key}")
+            return df.observe(observations[what], F.count(F.lit(1)).alias("rows"))
+
+        def rows(what: str) -> int:
+            return observations[what].get["rows"]
+
+        def write(df: DataFrame, path: str, what: str) -> DataFrame:
+            observed(df, what).write.mode("overwrite").parquet(path)
+            return self.spark.read.parquet(path)
+
+        stages: List[StageMetrics] = []
         t0 = time.time()
         docs = ppages.select("doc_id", extract_text(F.col("html")).alias("text"))
-        n_pages = docs.count()
-
         if self.dedup_pages:
             keep = (
-                docs.groupBy(F.md5("text").alias("h"))
+                observed(docs, "pages")
+                .groupBy(F.md5("text").alias("h"))
                 .agg(F.min("doc_id").alias("doc_id"))
                 .select("doc_id")
             )
             docs = docs.join(keep, "doc_id", "left_semi")
-            n_kept = docs.count()
-            stages.append(
-                StageMetrics(
-                    "dedup_pages", n_pages, n_kept, int((time.time() - t0) * 1000)
-                )
-            )
-            n_pages = n_kept
-            t0 = time.time()
+        # ONE fold per document: the per-document extraction (mention
+        # array + map-only triple pairs) is materialized once and both
+        # the mention table and the triples are exploded from it
+        x_dir = os.path.join(self.out_dir, "_docs", key)
+        triples.doc_extractions(observed(docs, "docs")).write.mode(
+            "overwrite"
+        ).parquet(x_dir)
+        ext = self.spark.read.parquet(x_dir)
+        ment_rows = (
+            self._model_mentions(docs)
+            if self.use_model
+            else triples.explode_mentions(ext)
+        )
+        t = triples.explode_triples(ext)
 
         # the mention stage IS the per-partition checkpoint: a compact
-        # parquet table downstream stages (linking, CC, triples) reuse,
-        # and the restart unit on resume (measured 5-10× faster than
+        # parquet table downstream stages (linking, CC) reuse, and the
+        # restart unit on resume (measured 5-10× faster than
         # localCheckpoint's deserialized cache)
-        m_dir = os.path.join(
-            self.out_dir, "_mentions", f"{self.partition_col}={part}"
+        m = write(
+            ment_rows,
+            os.path.join(self.out_dir, "_mentions", key),
+            "mentions",
         )
-        self._detect_mentions(docs).write.mode("overwrite").parquet(m_dir)
-        m = self.spark.read.parquet(m_dir)
-        n_mentions = m.count()
-        stages.append(
-            StageMetrics("mentions", n_pages, n_mentions, int((time.time() - t0) * 1000))
-        )
+        mentions_ms = int((time.time() - t0) * 1000)
 
         t0 = time.time()
-        g = gazetteer_df(self.spark)
-        ls = linking.link_scores(m, g)
-        n_link = ls.count()
-        stages.append(
-            StageMetrics("link_scores", n_mentions, n_link, int((time.time() - t0) * 1000))
+        write(
+            linking.link_scores(m, gazetteer_df(self.spark)),
+            os.path.join(self.out_dir, "_links", key),
+            "link_scores",
         )
+        link_ms = int((time.time() - t0) * 1000)
 
         t0 = time.time()
-        # map-only strategy: measured faster than the join even against
-        # the already-materialized mention table (zero shuffle)
-        t = triples.triples_df(docs)
         comps = canonical.connected_components(
             canonical.co_mention_edges(m),
-            stage_dir=os.path.join(self.out_dir, "_cc", f"{self.partition_col}={part}"),
+            stage_dir=os.path.join(self.out_dir, "_cc", key),
         )
         out = canonical.canonicalize_triples(t, comps).select(
             "doc_id",
@@ -292,15 +315,20 @@ class KGPipeline:
             F.col("subj").alias("subj_surface"),
             F.col("obj").alias("obj_surface"),
         )
-        part_dir = os.path.join(self.out_dir, f"{self.partition_col}={part}")
-        out.write.mode("overwrite").parquet(part_dir)
-        n_triples = self.spark.read.parquet(part_dir).count()
-        stages.append(
-            StageMetrics("triples", n_mentions, n_triples, int((time.time() - t0) * 1000))
-        )
+        write(out, os.path.join(self.out_dir, key), "triples")
+        triples_ms = int((time.time() - t0) * 1000)
+        shutil.rmtree(x_dir, ignore_errors=True)
 
-        fingerprint = f"pages={n_pages}"
-        self._write_manifest(str(part), stages, fingerprint)
+        n_docs, n_mentions = rows("docs"), rows("mentions")
+        if self.dedup_pages:
+            # dedup runs fused into the fold job
+            stages.append(StageMetrics("dedup_pages", rows("pages"), n_docs, 0))
+        stages += [
+            StageMetrics("mentions", n_docs, n_mentions, mentions_ms),
+            StageMetrics("link_scores", n_mentions, rows("link_scores"), link_ms),
+            StageMetrics("triples", n_mentions, rows("triples"), triples_ms),
+        ]
+        self._write_manifest(str(part), stages, f"pages={n_docs}")
         return stages
 
 

@@ -64,6 +64,13 @@ def get_spark(
         # driver-side build serializes the whole stage (measured: the
         # mention self-join stopped scaling past 8 cores at 64 MB)
         .config("spark.sql.autoBroadcastJoinThreshold", str(8 * 1024 * 1024))
+        # Python workers unpickle the package's Arrow kernels by module
+        # path; without this they import it only when started from the
+        # checkout root
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

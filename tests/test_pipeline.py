@@ -4,6 +4,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from ddaugner_spark.plans.pipeline import KGPipeline
 from ddaugner_spark.sources import synthesize_pages
@@ -191,3 +192,67 @@ def test_decode_null_payload(spark):
     assert rows["u1"]["n_bytes"] is None
     assert rows["u1"]["payload_sha"] is None
     assert rows["u1"]["feature"] is None
+
+
+def test_pipeline_runs_no_count_jobs_and_matches_operators(spark, docs, tmp_path, monkeypatch):
+    """A default run takes every row count from Observations on its
+    writes — DataFrame.count raising must not stop it — and each
+    partition's triples, mention table and link scores equal the
+    operators run on their own: triples_map_only + canonicalize_triples,
+    mentions_df and link_scores."""
+    from ddaugner_spark.operators import canonical, linking, mentions, triples
+    from ddaugner_spark.sources import gazetteer_df
+    from ddaugner_spark.sources.pages import extract_text
+
+    pages = synthesize_pages(docs.limit(120))
+    out = str(tmp_path / "kg")
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count called during KGPipeline.run")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(type(pages), "count", no_count)
+        report = KGPipeline(spark, out).run(pages, resume=False)
+    assert report.partitions
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for part in report.partitions:
+        key = f"lang={part}"
+        pdocs = pages.filter(F.col("lang") == part).select(
+            "doc_id", extract_text(F.col("html")).alias("text")
+        )
+        m = mentions.mentions_df(pdocs)
+        comps = canonical.connected_components(
+            canonical.co_mention_edges(m),
+            stage_dir=str(tmp_path / "cc" / key),
+            broadcast_labels=False,
+        )
+        want = canonical.canonicalize_triples(triples.triples_map_only(pdocs), comps)
+        want = want.select(
+            "doc_id", "sent_id", F.col("subj_canon").alias("subj"), "pred",
+            F.col("obj_canon").alias("obj"), F.col("subj").alias("subj_surface"),
+            F.col("obj").alias("obj_surface"),
+        )
+        got_t = spark.read.parquet(os.path.join(out, key))
+        assert got_t.columns == want.columns
+        assert rows(got_t) == rows(want), part
+
+        got_m = spark.read.parquet(os.path.join(out, "_mentions", key))
+        assert got_m.schema == spark.createDataFrame([], m.schema).schema
+        assert rows(got_m) == rows(m), part
+
+        # scores are rounded float sums, whose order of addition may differ
+        got_l = rows(spark.read.parquet(os.path.join(out, "_links", key)))
+        want_l = rows(linking.link_scores(m, gazetteer_df(spark)))
+        assert [r[:3] for r in got_l] == [r[:3] for r in want_l], part
+        assert [r[3] for r in got_l] == pytest.approx([r[3] for r in want_l], abs=2e-4)
+
+        man = json.load(open(os.path.join(out, "_lineage", f"{key}.json")))
+        n = {s["stage"]: (s["rows_in"], s["rows_out"]) for s in man["stages"]}
+        assert n["mentions"] == (pdocs.count(), len(rows(m)))
+        assert n["link_scores"][1] == len(got_l)
+        assert n["triples"][1] == len(rows(want))
+    # the per-document intermediate does not outlive the run
+    assert not os.path.exists(os.path.join(out, "_docs"))

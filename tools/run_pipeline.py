@@ -20,7 +20,8 @@ import sys
 
 # direct `python tools/run_pipeline.py` puts tools/ (not the repo root)
 # on sys.path; under spark-submit the --py-files zip provides the package
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -33,7 +34,13 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("ddaugner_kg_pipeline").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ddaugner_kg_pipeline")
+        # Python workers import the package's Arrow kernels by module
+        # path; on a direct run the checkout is where they find it
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from ddaugner_spark.plans.pipeline import KGPipeline
